@@ -166,7 +166,7 @@ object SparkEntry {
       }
     }
 
-  /** profiling accessor (SerpProfile scratch main) — same memoized index. */
+  /** the memoized demo index, for Bench's serve-path breakdown. */
   private[graft] def demoIndexForProfile(spark: SparkSession): (graft.index.IndexTables, DataFrame) =
     demoIndex(spark)
 

@@ -20,38 +20,21 @@ import graft.gfn
   *
   * EAGERNESS CONTRACT: the pairwise dedup ops ([[jaccardPairs]],
   * [[minhashLshPairs]], [[simhashPairsFromFps]],
-  * [[simhashPairsFromFpsTwoStage]], [[winnowPairs]], [[dupClusters]])
-  * and [[ivfCosineTopK]]
+  * [[simhashPairsFromFpsTwoStage]], [[simhashPairsFromFpsWide]],
+  * [[winnowPairs]]), [[dupClusters]] and [[ivfCosineTopK]]
   * are ACTIONS, not lazy transformations — constructing the result runs
   * Spark jobs on the caller's thread (the hot-key scan, an eager
   * localCheckpoint / collect that lets intermediate caches release
   * immediately — cache-leak hygiene in long-lived sessions outweighs plan
-  * composability here). Compose further transformations on the returned
-  * (already materialized, near-dup-sized) DataFrame freely; audit plans
-  * with `.explain` BEFORE calling, on the inputs. The purely lazy ops
-  * (text analysis, [[quantizeEmbeddings]], [[cosineDupPairsExact]],
+  * composability here). The six pairwise ops share ONE lifecycle,
+  * [[candidatePairs]]: persist, count, hot-key cap, `a < b` self-join,
+  * sort, localCheckpoint, unpersist. Compose further transformations on
+  * the returned (already materialized, near-dup-sized) DataFrame freely;
+  * audit plans with `.explain` BEFORE calling, on the inputs. The purely
+  * lazy ops (text analysis, [[quantizeEmbeddings]], [[cosineDupPairsExact]],
   * [[bruteForceCosineTopK]], [[sessionize]]) stay transformations.
   */
 object TrainingOps {
-
-  /** Plan-audit hook for the EAGER ops: their returned DataFrames are
-    * already-materialized LocalRelations/LogicalRDDs, so the interesting
-    * physical plan must be captured BEFORE the materialization. When
-    * GRAFT_PLAN_DUMP_DIR is set, writes `df.explain("formatted")` there
-    * (suffix from GRAFT_PLAN_SUFFIX); otherwise a no-op. Plan-only — never
-    * executes the query. */
-  private def planDump(name: String, df: DataFrame): Unit =
-    sys.env.get("GRAFT_PLAN_DUMP_DIR").foreach { dir =>
-      try {
-        val mode = org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        val s = df.queryExecution.explainString(mode)
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(dir,
-          s"$name${sys.env.getOrElse("GRAFT_PLAN_SUFFIX", "")}.txt"), s)
-      } catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[planDump] $name failed: ${e.getMessage}")
-      }
-    }
 
   def documents(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/documents.parquet")
@@ -223,46 +206,36 @@ object TrainingOps {
     * silent recall loss was the round-2 ADVICE finding) and the anti-join
     * probe is a guaranteed-broadcast local relation. maxDf <= 0 disables.
     *
-    * `keyDfBound` (round-7, guide §2.4 — remove shuffles outright): an
-    * a-priori upper bound on any key's df, when the CALLER can prove one.
-    * Every pairwise op here derives its bucket keys DISTINCT-PER-SOURCE-ROW
-    * (shingles are list_distinct per doc, band/block keys appear once per
-    * (doc, band), winnow fingerprints are deduplicated per doc), so
-    * df(key) ≤ #source rows. When that bound is ≤ maxDf the hot-key scan
-    * provably returns empty and is SKIPPED — at fixture/bench corpus sizes
-    * this removes a full groupBy-shuffle + driver collect per op, while at
-    * production scale (#rows > maxDf) the scan runs exactly as before.
-    * Pass a negative bound when no bound is known. */
+    * `keyDfBound` is an upper bound on any key's df ([[candidatePairs]]
+    * passes its row count). When it is ≤ maxDf the scan provably returns
+    * empty and is SKIPPED (round-7, guide §2.4 — remove shuffles outright):
+    * at fixture/bench corpus sizes this removes a full groupBy-shuffle +
+    * driver collect per op, while at production scale (#rows > maxDf) the
+    * scan runs exactly as before.
+    *
+    * Returns the capped rows plus the dropped-keys table itself (a tiny
+    * broadcast local relation, or None when nothing was capped), which
+    * [[sharedKeyCounts]] needs to CORRECT per-pair counts for the dropped
+    * keys rather than merely losing hot-only candidates. */
   private def capHotKeys(df: DataFrame, maxDf: Long, keyDfBound: Long,
-                         keys: String*): DataFrame =
-    capHotKeysEx(df, maxDf, keyDfBound, keys: _*)._1
-
-  /** [[capHotKeys]] plus the dropped-keys table itself (a tiny broadcast
-    * local relation, or None when nothing was capped) — for ops that must
-    * CORRECT their per-pair counts for the dropped keys rather than merely
-    * losing hot-only candidates (jaccardPairs/winnowPairs). */
-  private def capHotKeysEx(df: DataFrame, maxDf: Long, keyDfBound: Long,
-                           keys: String*)
-      : (DataFrame, Option[DataFrame]) = {
-    if (maxDf <= 0L) (df, None)
-    else if (keyDfBound >= 0L && keyDfBound <= maxDf) (df, None)
+                         keys: Seq[String]): (DataFrame, Option[DataFrame]) = {
+    if (maxDf <= 0L || keyDfBound <= maxDf) (df, None)
     else {
       val hot = df.groupBy(keys.map(col): _*)
         .agg(count(lit(1)).as("__df")).filter(col("__df") > maxDf)
         .select(keys.map(col): _*)
       val hotRows = hot.collect()
-      if (hotRows.nonEmpty)
+      if (hotRows.isEmpty) (df, None)
+      else {
         org.apache.log4j.Logger.getLogger(getClass)
           .warn(s"capHotKeys: dropping ${hotRows.length} bucket key(s) with df > " +
             s"$maxDf before pairwise self-join on (${keys.mkString(", ")}) — " +
             "pairs ONLY reachable through a dropped key are lost (raise maxDf " +
             "or widen the bucket keys if that trade is wrong here)")
-      if (hotRows.isEmpty) (df, None)
-      else {
         val local = df.sparkSession.createDataFrame(
           java.util.Arrays.asList(hotRows: _*), hot.schema)
         // using-columns joins move the keys to the front — restore the order
-        (df.join(broadcast(local), keys.toSeq, "left_anti")
+        (df.join(broadcast(local), keys, "left_anti")
           .select(df.columns.map(col).toIndexedSeq: _*), Some(local))
       }
     }
@@ -286,68 +259,89 @@ object TrainingOps {
     shingleArrays(docs)
       .select(col("doc_id"), explode(col("shingles")).as("shingle"))
 
+  /** What an op's pair step sees: the cached base rows, their uncapped
+    * postings, the dropped hot keys (if any) and the capped self-join. */
+  private final case class Candidates(cached: DataFrame, postings: DataFrame,
+                                      hot: Option[DataFrame], joined: DataFrame)
+
+  /** The one candidate-pair lifecycle of every pairwise dedup op. It
+    * persists `base` (tiny next to the corpus but expensive to compute, and
+    * read by the hot-key scan and both join sides) and counts it: one job
+    * that materializes the persist AND bounds the scan, since every op's
+    * keys are distinct per base row (list_distinct shingles, one band/block
+    * key per (doc, band), per-doc-deduplicated winnow fingerprints). It then
+    * explodes the `postings` (doc_id, keys…, payload…) from the cache, caps
+    * hot keys and self-joins on `keys` into `a < b` rows (doc_id → a / b,
+    * payload columns suffixed alike: sh → sha / shb). `pairs` verifies
+    * those into the op's rows, which are sorted by (a, b) and
+    * localCheckpointed so the cache is released NOW: repeated calls in a
+    * long-lived session must not accumulate cached plans (round-2 ADVICE
+    * leak class, also on failure); checkpoint blocks are
+    * ContextCleaner-managed, unlike CacheManager entries, which pin until an
+    * explicit unpersist. */
+  private def candidatePairs(base: DataFrame, maxDf: Long, keys: String*)(
+      postings: DataFrame => DataFrame)(pairs: Candidates => DataFrame): DataFrame = {
+    val cached = base.persist()
+    try {
+      val nRows = cached.count()
+      val posting = postings(cached)
+      val (capped, hot) = capHotKeys(posting, maxDf, nRows, keys)
+      def side(id: String): DataFrame = capped.toDF(capped.columns.toIndexedSeq.map {
+        case "doc_id" => id
+        case k if keys.contains(k) => k
+        case c => c + id
+      }: _*)
+      val joined = side("a").join(side("b"), keys).filter(col("a") < col("b"))
+      pairs(Candidates(cached, posting, hot, joined)).orderBy("a", "b").localCheckpoint(true)
+    } finally cached.unpersist()
+  }
+
+  /** Per-pair count of the shared `key` values, named `name`. The df cap
+    * bounds CANDIDATE GENERATION only: when keys were actually dropped, the
+    * capped join's count is CORRECTED by the pair's shared hot keys (each
+    * doc's hot-key subset is a tiny row-local array from one linear
+    * broadcast join + collect_set — the hot POSTINGS are at most
+    * |docs|·|hot| rows, never joined pairwise), so a dropped hot key can
+    * only lose pairs reachable SOLELY through it and never deflates the
+    * count of a surviving pair. Exact because keys are distinct per doc.
+    * With no hot keys (the common case) this is the plain capped count. */
+  private def sharedKeyCounts(c: Candidates, key: String, name: String): DataFrame = {
+    val counts = c.joined.groupBy("a", "b").agg(count(lit(1)).as(name))
+    c.hot match {
+      case None => counts
+      case Some(hotDf) =>
+        val hotPerDoc = c.postings.join(broadcast(hotDf), Seq(key))
+          .groupBy("doc_id").agg(collect_set(col(key)).as("hot"))
+        counts
+          .join(hotPerDoc.toDF("a", "hot_a"), Seq("a"), "left")
+          .join(hotPerDoc.toDF("b", "hot_b"), Seq("b"), "left")
+          .withColumn(name, col(name) + size(array_intersect(
+            coalesce(col("hot_a"), array()),
+            coalesce(col("hot_b"), array()))).cast("long"))
+          .select("a", "b", name)
+    }
+  }
+
   /** n-gram Jaccard near-dup pairs: shingle-bucketed self-join (the join
     * explodes only where shingles collide — candidate-bounded, not O(n²)),
     * exact Jaccard ≥ threshold. Set sizes come from the shingle ARRAY
-    * row-locally (no extra aggregation shuffle).
-    *
-    * The df cap bounds CANDIDATE GENERATION only: when keys were actually
-    * dropped, the per-pair count is CORRECTED by the pair's shared hot
-    * keys (each doc's hot-key subset is a tiny row-local array from one
-    * broadcast join — never a hot-key self-join), so a dropped hot
-    * shingle can only lose pairs reachable SOLELY through it — it can
-    * never deflate the Jaccard of a surviving pair (counting the capped
-    * join rows alone would: two docs sharing a hot shingle plus others
-    * would score (inter−1)/(sa+sb−inter+1)). With no hot keys (the common
-    * case) the plan is exactly the cheap capped-count shape. */
+    * row-locally (no extra aggregation shuffle). A capped hot shingle can
+    * never deflate the Jaccard of a surviving pair ([[sharedKeyCounts]];
+    * counting the capped join rows alone would: two docs sharing a hot
+    * shingle plus others would score (inter−1)/(sa+sb−inter+1)). */
   def jaccardPairs(docs: DataFrame, threshold: Double,
-                   maxShingleDf: Long = DefaultMaxBucketDf): DataFrame = {
-    val arrs = shingleArrays(docs).persist()
-    // materialize the persist AND bound the hot-key scan in one cheap job:
-    // shingles are distinct per doc, so df(shingle) ≤ nDocs — when nDocs ≤
-    // maxShingleDf the scan cannot fire and capHotKeysEx skips it (§2.4)
-    val nDocs = arrs.count()
-    val sizes = arrs.select(col("doc_id"), size(col("shingles")).as("sz"))
-    val exploded0 =
-      arrs.select(col("doc_id"), explode(col("shingles")).as("shingle"))
-    val (sh, hotOpt) = capHotKeysEx(exploded0, maxShingleDf, nDocs, "shingle")
-    val a = sh.toDF("a", "shingle")
-    val b = sh.toDF("b", "shingle")
-    val interSub = a.join(b, "shingle").filter(col("a") < col("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("inter"))
-    val inter = hotOpt match {
-      case None => interSub
-      case Some(hotDf) =>
-        // per-doc hot-key subset: linear broadcast join + collect_set (the
-        // hot POSTINGS are at most |docs|·|hot| rows, never joined pairwise)
-        val hotPerDoc = exploded0.join(broadcast(hotDf), Seq("shingle"))
-          .groupBy("doc_id").agg(collect_set(col("shingle")).as("hot"))
-        interSub
-          .join(hotPerDoc.toDF("a", "hot_a"), Seq("a"), "left")
-          .join(hotPerDoc.toDF("b", "hot_b"), Seq("b"), "left")
-          .withColumn("inter", col("inter") + size(array_intersect(
-            coalesce(col("hot_a"), array()),
-            coalesce(col("hot_b"), array()))).cast("long"))
-          .select("a", "b", "inter")
+                   maxShingleDf: Long = DefaultMaxBucketDf): DataFrame =
+    candidatePairs(shingleArrays(docs), maxShingleDf, "shingle")(
+      _.select(col("doc_id"), explode(col("shingles")).as("shingle"))) { c =>
+      val sizes = c.cached.select(col("doc_id"), size(col("shingles")).as("sz"))
+      sharedKeyCounts(c, "shingle", "inter")
+        .join(sizes.toDF("a", "sa"), "a")
+        .join(sizes.toDF("b", "sb"), "b")
+        .withColumn("jaccard", gfn.round_exact(col("inter").cast("double") /
+          (col("sa") + col("sb") - col("inter")).cast("double"), 4))
+        .filter(col("jaccard") >= threshold)
+        .select("a", "b", "jaccard")
     }
-    val result = inter
-      .join(sizes.toDF("a", "sa"), "a")
-      .join(sizes.toDF("b", "sb"), "b")
-      .withColumn("jaccard", gfn.round_exact(col("inter").cast("double") /
-        (col("sa") + col("sb") - col("inter")).cast("double"), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("a", "b", "jaccard")
-      .orderBy("a", "b")
-    // materialize the (near-dup-sized, ≪ corpus) result so the shingle
-    // cache can be released NOW — repeated calls in a long-lived session
-    // must not accumulate cached plans (round-2 ADVICE leak class); the
-    // checkpoint blocks are ContextCleaner-managed, unlike CacheManager
-    // entries which pin until an explicit unpersist
-    planDump("q_jaccard_pairs", result)
-    val out = result.localCheckpoint(true)
-    arrs.unpersist()
-    out
-  }
 
   /** MinHash signatures: k md5-salted lexicographic-min hashes over the
     * shingle set (md5 is portable to the DuckDB oracle; at production
@@ -376,32 +370,15 @@ object TrainingOps {
     require(k > 0 && rowsPerBand > 0 && k % rowsPerBand == 0,
       s"k=$k must be a positive multiple of rowsPerBand=$rowsPerBand — " +
         "trailing signature hashes would otherwise never bucket anything")
-    // the signature table is TINY (one row of k hashes per doc, ≪ corpus
-    // text) but EXPENSIVE (k salted md5 minima over every shingle) — and
-    // it has three consumers (hot-key scan + both self-join sides), so
-    // persist it; recomputing it per consumer dominated the op's cost
-    val sig = minhashSignatures(docs, k).persist()
-    // materialize the persist and bound the hot-key scan in one job: one
-    // signature row per doc and one (band, sig) key per (doc, band), so
-    // df(band, sig) ≤ nDocs — at nDocs ≤ maxBandDf the scan is skipped
-    val nDocs = sig.count()
-    // one pass + posexplode (a per-band union would recompute the k
-    // signature hashes once PER BAND)
+    // the signature table (k salted md5 minima per doc) is the cached base;
+    // its bands posexplode in one pass (a per-band union would recompute
+    // the k signature hashes once PER BAND)
     val bandCols = (0 until k / rowsPerBand).map { bnd =>
       concat((0 until rowsPerBand).map(r => col(s"mh${bnd * rowsPerBand + r}")): _*)
     }
-    val bands = sig
-      .select(col("doc_id"), posexplode(array(bandCols: _*)).as(Seq("band", "sig")))
-    val capped = capHotKeys(bands, maxBandDf, nDocs, "band", "sig")
-    val l = capped.toDF("a", "band", "sig")
-    val r = capped.toDF("b", "band", "sig")
-    val result = l.join(r, Seq("band", "sig")).filter(col("a") < col("b"))
-      .select("a", "b").distinct()
-      .orderBy("a", "b")
-    planDump("q_minhash_lsh", result)
-    val out = result.localCheckpoint(true) // release the cache (leak hygiene)
-    sig.unpersist()
-    out
+    candidatePairs(minhashSignatures(docs, k), maxBandDf, "band", "sig")(
+      _.select(col("doc_id"), posexplode(array(bandCols: _*)).as(Seq("band", "sig"))))(
+      _.joined.select("a", "b").distinct())
   }
 
   /** Near-dup CLUSTERS from a pair list: connected components by HashMin
@@ -480,11 +457,11 @@ object TrainingOps {
     * with md5-lower-64 so the DuckDB oracle recomputes the fingerprint
     * bit-exactly; `portable=false` uses the faster xxhash64 kernel
     * (production default at scale — same plan shape, fixture-tested). */
-  def simhashes(docs: DataFrame, portable: Boolean = true): DataFrame = {
-    val fp = if (portable) gfn.simhash_md5(wsTokens(col("text")))
-             else gfn.simhash(wsTokens(col("text")))
-    spread(docs).select(col("doc_id"), fp.as("simhash")).orderBy("doc_id")
-  }
+  def simhashes(docs: DataFrame, portable: Boolean = true): DataFrame =
+    spread(docs).select(col("doc_id"), simhashOf(portable).as("simhash")).orderBy("doc_id")
+
+  private def simhashOf(portable: Boolean): Column =
+    if (portable) gfn.simhash_md5(wsTokens(col("text"))) else gfn.simhash(wsTokens(col("text")))
 
   /** SimHash near-dup pairs within Hamming distance `maxHamming`, bucketed
     * by `maxHamming + 1` bit-blocks: two fingerprints differing in ≤ h bits
@@ -494,11 +471,33 @@ object TrainingOps {
     * block-bucket-bounded instead of O(n²). */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
                    portable: Boolean = true,
-                   maxBucketDf: Long = DefaultMaxBucketDf): DataFrame = {
-    val sims = spread(docs).select(col("doc_id"),
-      (if (portable) gfn.simhash_md5(wsTokens(col("text")))
-       else gfn.simhash(wsTokens(col("text")))).as("sh"))
-    simhashPairsFromFps(sims, maxHamming, maxBucketDf)
+                   maxBucketDf: Long = DefaultMaxBucketDf): DataFrame =
+    simhashPairsFromFps(spread(docs).select(col("doc_id"), simhashOf(portable).as("sh")),
+      maxHamming, maxBucketDf)
+
+  /** The simhash family's candidate join and verify step: one (q, bucket)
+    * key per `keyCols` entry per fingerprint, posexploded in ONE pass (a
+    * per-block union would recompute the fingerprint PER BLOCK); a pair
+    * sharing several keys is verified once, kept at `hamming` ≤ maxHamming. */
+  private def simhashKeyPairs(sims: DataFrame, keyCols: Seq[Column], hamming: Column,
+                              maxHamming: Int, maxBucketDf: Long): DataFrame =
+    candidatePairs(sims, maxBucketDf, "q", "bucket")(
+      _.select(col("doc_id"), col("sh"),
+        posexplode(array(keyCols: _*)).as(Seq("q", "bucket"))))(
+      _.joined.select(col("a"), col("b"), hamming.cast("long").as("hamming"))
+        .distinct()
+        .filter(col("hamming") <= maxHamming))
+
+  private def xorHamming: Column = bit_count(col("sha").bitwiseXOR(col("shb")))
+
+  /** `nBlocks` disjoint bit-blocks of the 64-bit fingerprint `sh`. */
+  private def blocks64(nBlocks: Int): IndexedSeq[Column] = {
+    val starts = (0 to nBlocks).map(i => i * 64 / nBlocks)
+    (0 until nBlocks).map { q =>
+      val width = starts(q + 1) - starts(q)
+      val mask = if (width >= 64) -1L else (1L << width) - 1L
+      shiftright(col("sh"), starts(q)).bitwiseAND(lit(mask))
+    }
   }
 
   /** [[simhashPairs]] over precomputed fingerprints (doc_id, sh LONG) —
@@ -506,84 +505,23 @@ object TrainingOps {
   def simhashPairsFromFps(sims: DataFrame, maxHamming: Int,
                           maxBucketDf: Long = DefaultMaxBucketDf): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 64, s"maxHamming=$maxHamming")
-    val nBlocks = maxHamming + 1
-    val starts = (0 to nBlocks).map(i => i * 64 / nBlocks)
-    // fingerprints are one LONG per doc but may be expensive upstream
-    // (a simhash over every token) — persist for the three consumers;
-    // the count materializes it and bounds the hot-key scan (one (q,
-    // bucket) key per (doc, block) ⇒ df ≤ nDocs — scan skipped when ≤ cap)
-    val fps = sims.persist()
-    val nDocs = fps.count()
-    // one pass + posexplode (a per-block union would recompute the
-    // fingerprint once PER BLOCK)
-    val blockCols = (0 until nBlocks).map { q =>
-      val lo = starts(q)
-      val width = starts(q + 1) - lo
-      val mask = if (width >= 64) -1L else (1L << width) - 1L
-      shiftright(col("sh"), lo).bitwiseAND(lit(mask))
-    }
-    val blocked = fps.select(col("doc_id"), col("sh"),
-      posexplode(array(blockCols: _*)).as(Seq("q", "bucket")))
-    val capped = capHotKeys(blocked, maxBucketDf, nDocs, "q", "bucket")
-    val l = capped.toDF("a", "sha", "q", "bucket")
-    val r = capped.toDF("b", "shb", "q", "bucket")
-    val result = l.join(r, Seq("q", "bucket")).filter(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        bit_count(col("sha").bitwiseXOR(col("shb"))).cast("long").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-      .orderBy("a", "b")
-    planDump("q_simhash_pairs", result)
-    val out = result.localCheckpoint(true)
-    fps.unpersist()
-    out
+    simhashKeyPairs(sims, blocks64(maxHamming + 1), xorHamming, maxHamming, maxBucketDf)
   }
 
   /** winnowing fingerprint overlap pairs. `portable=true` uses md5 k-gram
     * hashes (DuckDB-oracle-matched); false uses the rolling-hash kernel.
-    * As in [[jaccardPairs]], the df cap bounds candidate generation only —
-    * when keys were dropped, `shared` is corrected by the pair's shared
-    * hot fingerprints (winnow fingerprints are deduplicated per doc, so
-    * the per-pair count + hot-subset intersection is the exact overlap),
-    * never deflated by a dropped hot key. */
+    * As in [[jaccardPairs]], a capped hot fingerprint never deflates the
+    * `shared` count of a surviving pair ([[sharedKeyCounts]]). */
   def winnowPairs(docs: DataFrame, minShared: Int,
                   portable: Boolean = true,
                   maxFpDf: Long = DefaultMaxBucketDf): DataFrame = {
     val fpsExpr = if (portable) gfn.winnow_md5(col("text"), lit(8), lit(4))
                   else gfn.winnow_fingerprints(col("text"), lit(8), lit(4))
-    // fingerprint posting list: ~|text|/w longs per doc (≪ text bytes) but
-    // costs a full rolling-hash pass to build — persist for the hot-key
-    // scan + both join sides
-    val posting = spread(docs).select(col("doc_id"), explode(fpsExpr).as("fp")).persist()
-    // winnow fingerprints are deduplicated per doc ⇒ df(fp) ≤ nDocs; the
-    // bound skips the hot-key scan at sub-cap corpus sizes (§2.4). docs is
-    // typically a parquet scan, so the count is metadata-cheap.
-    val nDocs = docs.count()
-    val (fp, hotOpt) = capHotKeysEx(posting, maxFpDf, nDocs, "fp")
-    val l = fp.toDF("a", "fp")
-    val r = fp.toDF("b", "fp")
-    val sharedSub = l.join(r, "fp").filter(col("a") < col("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("shared"))
-    val shared = hotOpt match {
-      case None => sharedSub
-      case Some(hotDf) =>
-        val hotPerDoc = posting.join(broadcast(hotDf), Seq("fp"))
-          .groupBy("doc_id").agg(collect_set(col("fp")).as("hot"))
-        sharedSub
-          .join(hotPerDoc.toDF("a", "hot_a"), Seq("a"), "left")
-          .join(hotPerDoc.toDF("b", "hot_b"), Seq("b"), "left")
-          .withColumn("shared", col("shared") + size(array_intersect(
-            coalesce(col("hot_a"), array()),
-            coalesce(col("hot_b"), array()))).cast("long"))
-          .select("a", "b", "shared")
-    }
-    val result = shared
-      .filter(col("shared") >= minShared)
-      .orderBy("a", "b")
-    planDump("q_winnow_pairs", result)
-    val out = result.localCheckpoint(true)
-    posting.unpersist()
-    out
+    // cached base: the per-doc fingerprint array (a full rolling-hash pass);
+    // its per-doc count bounds df(fp), the exploded postings' would not
+    candidatePairs(spread(docs).select(col("doc_id"), fpsExpr.as("fps")), maxFpDf, "fp")(
+      _.select(col("doc_id"), explode(col("fps")).as("fp")))(
+      sharedKeyCounts(_, "fp", "shared").filter(col("shared") >= minShared))
   }
 
   /** [[simhashPairsFromFps]] upgraded for web-scale corpora: bucket by
@@ -597,35 +535,11 @@ object TrainingOps {
   def simhashPairsFromFpsTwoStage(sims: DataFrame, maxHamming: Int,
                                   maxBucketDf: Long = DefaultMaxBucketDf): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 62, s"maxHamming=$maxHamming")
-    val nBlocks = maxHamming + 2
-    val starts = (0 to nBlocks).map(i => i * 64 / nBlocks)
-    def block(q: Int): Column = {
-      val lo = starts(q)
-      val width = starts(q + 1) - lo
-      val mask = if (width >= 64) -1L else (1L << width) - 1L
-      shiftright(col("sh"), lo).bitwiseAND(lit(mask))
-    }
-    // both block values packed into one 64-bit key (widths ≤ 32);
-    // single pass + posexplode over all C(b,2) block-pair keys
-    val fps = sims.persist() // three consumers, expensive upstream
-    val nDocs = fps.count() // materialize + hot-scan bound (df ≤ nDocs)
-    val pairCols = (for { i <- 0 until nBlocks; j <- i + 1 until nBlocks }
-      yield shiftleft(block(i), 32).bitwiseOR(block(j)))
-    val keyed = fps.select(col("doc_id"), col("sh"),
-      posexplode(array(pairCols: _*)).as(Seq("q", "bucket")))
-    val capped = capHotKeys(keyed, maxBucketDf, nDocs, "q", "bucket")
-    val l = capped.toDF("a", "sha", "q", "bucket")
-    val r = capped.toDF("b", "shb", "q", "bucket")
-    val result = l.join(r, Seq("q", "bucket")).filter(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        bit_count(col("sha").bitwiseXOR(col("shb"))).cast("long").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-      .orderBy("a", "b")
-    planDump("q_simhash_pairs_2stage", result)
-    val out = result.localCheckpoint(true)
-    fps.unpersist()
-    out
+    val block = blocks64(maxHamming + 2)
+    // both block values packed into one 64-bit key (widths ≤ 32)
+    val pairKeys = for { i <- block.indices; j <- i + 1 until block.size }
+      yield shiftleft(block(i), 32).bitwiseOR(block(j))
+    simhashKeyPairs(sims, pairKeys, xorHamming, maxHamming, maxBucketDf)
   }
 
   /** Bit-slice [lo, lo+width) of an ARRAY<LONG> sketch as a LONG (little-
@@ -667,8 +581,7 @@ object TrainingOps {
                               maxBucketDf: Long = DefaultMaxBucketDf): DataFrame = {
     require(nbits % 64 == 0 && nbits >= 64, s"nbits=$nbits")
     require(maxHamming >= 1 && maxHamming <= nbits - 2, s"maxHamming=$maxHamming")
-    val pairKeyWidth = 2 * nbits / (maxHamming + 2)
-    val twoStage = pairKeyWidth >= 7
+    val twoStage = 2 * nbits / (maxHamming + 2) >= 7 // pair-key width
     // clamp the block count so every block fits sliceBitsWide's 64-bit
     // slice (e.g. nbits=256, maxHamming=1 would otherwise ask for 85-bit
     // blocks and throw). EXTRA blocks are always completeness-safe: with
@@ -679,28 +592,14 @@ object TrainingOps {
     val starts = (0 to nBlocks).map(i => i * nbits / nBlocks)
     def block(q: Int): Column =
       sliceBitsWide(col("sh"), starts(q), starts(q + 1) - starts(q))
-    val fps = sims.persist()
-    val nDocs = fps.count() // materialize + hot-scan bound (df ≤ nDocs)
     val keyCols: Seq[Column] =
       if (twoStage)
         for { i <- 0 until nBlocks; j <- i + 1 until nBlocks }
           yield struct(block(i).as("b1"), block(j).as("b2"))
       else
         (0 until nBlocks).map(q => struct(block(q).as("b1"), lit(0L).as("b2")))
-    val keyed = fps.select(col("doc_id"), col("sh"),
-      posexplode(array(keyCols: _*)).as(Seq("q", "bucket")))
-    val capped = capHotKeys(keyed, maxBucketDf, nDocs, "q", "bucket")
-    val l = capped.toDF("a", "sha", "q", "bucket")
-    val r = capped.toDF("b", "shb", "q", "bucket")
-    val result = l.join(r, Seq("q", "bucket")).filter(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        gfn.hamming_words(col("sha"), col("shb")).cast("long").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-      .orderBy("a", "b")
-    val out = result.localCheckpoint(true)
-    fps.unpersist()
-    out
+    simhashKeyPairs(sims, keyCols, gfn.hamming_words(col("sha"), col("shb")),
+      maxHamming, maxBucketDf)
   }
 
   /** int8 max-abs quantization of the embedding column — the standard

@@ -182,15 +182,6 @@ object Searcher {
         StructField("title_score", DoubleType), StructField("title", StringType))))
   }
 
-  private val prof = sys.env.contains("GRAFT_SERP_PROF")
-  private def ptime[T](label: String)(f: => T): T =
-    if (!prof) f else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[serp-prof] $label: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
-
   /** Serving-path latency confs, applied once to the DEDICATED serve
     * session in [[prepare]]. AQE turns every query stage of the SERP
     * plan into its own driver-replanned job with a materialization barrier:
@@ -221,14 +212,12 @@ object Searcher {
     val groups = TextPipeline.tokenizeQuery(query)
     if (groups.isEmpty) return emptyResult(spark)
     val allStems = groups.flatten
-    val wordIdMap = ptime("wordId lookup") {
-      p.wordIdLocal match {
-        case Some(dict) => // prepared in-memory dictionary (small vocab)
-          allStems.distinct.flatMap(s => dict.get(s).map(s -> _)).toMap
-        case None => idx.wordDict
-          .filter(col("word").isInCollection(allStems.distinct))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      }
+    val wordIdMap = p.wordIdLocal match {
+      case Some(dict) => // prepared in-memory dictionary (small vocab)
+        allStems.distinct.flatMap(s => dict.get(s).map(s -> _)).toMap
+      case None => idx.wordDict
+        .filter(col("word").isInCollection(allStems.distinct))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     }
 
     // findWordId with the phrase-kill rule (Ranker.kt:100-119)
@@ -323,17 +312,6 @@ object Searcher {
       .orderBy(desc("total"), asc("url_id"))
       .limit(topK)
 
-    // plan-audit hook (round 7): the returned SERP is a LocalRelation, so
-    // the serve's actual scoring plan must be captured here, pre-collect
-    sys.env.get("GRAFT_PLAN_DUMP_DIR").foreach { dir =>
-      try {
-        val mode = org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(dir,
-          s"q_serp${sys.env.getOrElse("GRAFT_PLAN_SUFFIX", "")}.txt"),
-          top.queryExecution.explainString(mode))
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
     // the SERP is ≤ topK rows — materialize it as a LocalRelation so the
     // per-query `norm` cache can be released immediately (a serving session
     // firing many queries must not accumulate cached plans), and downstream
@@ -341,7 +319,7 @@ object Searcher {
     // unpersist is in a finally: a failed/cancelled serve job must not
     // leak one cached plan per failed query
     val collected =
-      try ptime("serp collect") { top.collect() }
+      try top.collect()
       finally joined.unpersist()
     if (collected.isEmpty) return emptyResult(spark) // pinned empty-SERP schema
     // re-assert the order driver-side (TakeOrderedAndProject returns rows

@@ -474,6 +474,17 @@ class OpsSpec extends AnyFunSuite {
     assert(T.minhashLshPairs(dups, maxBandDf = 0).count() == 30L * 29 / 2)
     assert(T.minhashLshPairs(dups, maxBandDf = 10).count() == 0)
 
+    // and on the simhash family's block keys: 30 identical fingerprints put
+    // all 30 docs in every bucket of every variant
+    val fp = 0x0123456789abcdefL
+    val same = (0L until 30L).map(i => (i, fp)).toDF("doc_id", "sh")
+    val sameWide = (0L until 30L).map(i => (i, Seq(fp, ~fp))).toDF("doc_id", "sh")
+    for ((cap, want) <- Seq(0L -> 30L * 29 / 2, 10L -> 0L)) {
+      assert(T.simhashPairsFromFps(same, 6, maxBucketDf = cap).count() == want)
+      assert(T.simhashPairsFromFpsTwoStage(same, 6, maxBucketDf = cap).count() == want)
+      assert(T.simhashPairsFromFpsWide(sameWide, 128, 6, maxBucketDf = cap).count() == want)
+    }
+
     // default caps are no-ops on the sf0.001 fixture corpus (df ≪ cap)
     val fix = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     assert(T.jaccardPairs(fix, 0.4).collect().map(_.toString).toSeq ==
@@ -512,6 +523,53 @@ class OpsSpec extends AnyFunSuite {
     wCapped.foreach { case (k, v) =>
       assert(wUncapped(k) == v, s"winnow pair $k: capped $v != uncapped ${wUncapped(k)}")
     }
+  }
+
+  test("Spark job count of each pairwise op is pinned on the sf0.001 fixture") {
+    // the pairwise ops are actions (TrainingOps scaladoc); these are the
+    // jobs their shared persist/count/self-join/checkpoint lifecycle runs
+    // on the fixture, so an op that grows an extra job fails here
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val sims = docs.select(col("doc_id"), gfn.simhash_md5(T.wsTokens(col("text"))).as("sh"))
+    val wide = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .select(col("vec_id").as("doc_id"), gfn.srp_sketch_n(
+        transform(col("embedding"), x => x.cast("double")), 2).as("sh"))
+    val ops = Seq[(String, () => Unit)](
+      "jaccard" -> (() => T.jaccardPairs(docs, 0.4)),
+      "minhash" -> (() => T.minhashLshPairs(docs)),
+      "simhash" -> (() => T.simhashPairsFromFps(sims, 6)),
+      "simhash_2stage" -> (() => T.simhashPairsFromFpsTwoStage(sims, 6)),
+      "simhash_wide" -> (() => T.simhashPairsFromFpsWide(wide, 128,
+        T.srpRadiusForN(0.4, 128))),
+      "winnow_md5" -> (() => T.winnowPairs(docs, 60)),
+      "winnow_rolling" -> (() => T.winnowPairs(docs, 60, portable = false)))
+    val prefix = "opsspec-jobs-"
+    val jobs = scala.collection.mutable.Map.empty[String, Int]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith(prefix)).map(_.stripPrefix(prefix))
+          .foreach(g => jobs.synchronized(jobs(g) = jobs.getOrElse(g, 0) + 1))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    def inGroup(name: String)(f: => Unit): Unit = {
+      sc.setJobGroup(prefix + name, name)
+      try f finally sc.clearJobGroup()
+    }
+    try {
+      ops.foreach { case (name, op) => inGroup(name)(op()) }
+      // listener events arrive in order: once the flush job is seen, every
+      // job of the ops above has been counted
+      inGroup("flush")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (jobs.synchronized(!jobs.contains("flush")) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+    val measured = jobs.synchronized(jobs.toMap) - "flush"
+    assert(measured == Map("jaccard" -> 11, "minhash" -> 9, "simhash" -> 8,
+      "simhash_2stage" -> 8, "simhash_wide" -> 8, "winnow_md5" -> 9,
+      "winnow_rolling" -> 9))
   }
 
   test("multimodal: decode stub plumbing — schema, determinism, frame explode") {

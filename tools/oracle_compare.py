@@ -10,6 +10,7 @@ Usage: oracle_compare.py <sf_dir> <verify_out_dir> [query ...]
 import json
 import math
 import os
+import re
 import sys
 
 import duckdb
@@ -34,6 +35,42 @@ def val_eq(a, b):
             return True
         return abs(fa - fb) <= 1e-9 + 1e-9 * max(abs(fa), abs(fb))
     return a == b
+
+
+def order_by_columns(sql, cols):
+    """Output-column indexes of the SQL's final top-level ORDER BY, or None
+    when it has none or an item is not an output column name or position."""
+    depth, depths = 0, []
+    for ch in sql:
+        depth += (ch == "(") - (ch == ")")
+        depths.append(depth)
+    found = [m for m in re.finditer(r"\bORDER\s+BY\b", sql, re.I)
+             if depths[m.start()] == 0]
+    if not found:
+        return None
+    clause = re.split(r"\b(?:LIMIT|OFFSET)\b", sql[found[-1].end():],
+                      flags=re.I)[0]
+    items, depth, cur = [], 0, ""
+    for ch in clause:
+        depth += (ch == "(") - (ch == ")")
+        if ch == "," and depth == 0:
+            items.append(cur)
+            cur = ""
+        else:
+            cur += ch
+    items.append(cur)
+    lower = [c.lower() for c in cols]
+    keys = []
+    for item in items:
+        item = re.sub(r"\s+(ASC|DESC)\b|\s+NULLS\s+(FIRST|LAST)\b", "",
+                      item.strip(), flags=re.I).strip()
+        if re.fullmatch(r"\d+", item) and 1 <= int(item) <= len(cols):
+            keys.append(int(item) - 1)
+        elif re.fullmatch(r"\w+", item) and item.lower() in lower:
+            keys.append(lower.index(item.lower()))
+        else:
+            return None
+    return keys
 
 
 def main():
@@ -94,9 +131,17 @@ def main():
             # positional mismatch can be a SORT-TIE reorder (duplicate sort
             # keys ordered differently by Spark vs DuckDB) — the driver's
             # comparator tolerates those (r6 passed 42/42 at sf0.1 with a
-            # q_scan_filter tie); retry with both sides fully sorted
+            # q_scan_filter tie). Only rows that tie on the final ORDER BY
+            # may be permuted: the sort-key projections must agree
+            # positionally, and then both sides fully sorted must agree.
+            # Without a parseable ORDER BY there is no retry.
+            keys = order_by_columns(sql, scols)
+            proj = lambda rows: [[r[k] for k in keys] for r in rows]
             key = lambda r: tuple((v is None, str(v)) for v in r)
-            if first_diff(sorted(srows, key=key), sorted(orows, key=key)) is None:
+            if (keys is not None
+                    and first_diff(proj(srows), proj(orows)) is None
+                    and first_diff(sorted(srows, key=key),
+                                   sorted(orows, key=key)) is None):
                 print(f"{name}: OK ({len(srows)} rows; tie-order differs at "
                       f"row={bad[0]} col={bad[1]})")
             else:
